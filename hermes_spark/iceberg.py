@@ -51,7 +51,8 @@ from __future__ import annotations
 import json
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # -- pure statement generators (unit-tested jar-free) --------------------
@@ -462,33 +463,26 @@ class IcebergTable:
         op_col: str = "op",
         commit_info: dict | None = None,
         sidecar: DataFrame | None = None,
+        split: str | None = None,
     ) -> int | str | None:
         if batch_id is not None and str(batch_id) in self.committed_batch_ids():
             return None  # replay no-op (string-compared on both sides)
+        rejected = seen = None
+        if split is not None:
+            # the catalog has no one-job split: the MERGE takes the true
+            # rows while an observation counts the false ones, which are
+            # re-scanned for the sidecar only when there are any — a
+            # healthy batch stays one scan, with no sidecar row
+            seen = Observation(f"split_{batch_id}")
+            rejected = changes.where(~F.col(split)).drop(split)
+            changes = changes.observe(
+                seen, F.sum((~F.col(split)).cast("long")).alias("n")
+            ).where(F.col(split)).drop(split)
         if sidecar is not None and batch_id is not None:
             # before the MERGE: the sink reads the split back only after
             # the main commit is visible, so sidecar-first ordering means
-            # a visible commit always finds its split.  The append is
-            # made replay-idempotent by deleting any same-id rows first
-            # (a crash between sidecar write and MERGE commit re-runs
-            # this path; a plain append would duplicate the split)
-            from pyspark.sql import functions as F
-
-            tagged = sidecar.withColumn("_sink_batch_id", F.lit(str(batch_id)))
-            try:
-                self.spark.sql(
-                    f"DELETE FROM {self._sidecar_identifier} "
-                    f"WHERE _sink_batch_id = '{_q(batch_id)}'"
-                )
-                tagged.writeTo(self._sidecar_identifier).append()
-            except Exception as e:
-                # only "table doesn't exist yet" falls through to
-                # create(); any other failure (analysis error, transient
-                # executor death) must propagate — a blanket fallback
-                # masked the root cause behind TableAlreadyExists
-                if not _is_missing_table_error(e):
-                    raise
-                tagged.writeTo(self._sidecar_identifier).create()
+            # a visible commit always finds its split
+            self._write_sidecar(sidecar, batch_id)
         cols = [f.name for f in self.schema.fields]
         view = f"_hermes_changes_{abs(hash((self.identifier, batch_id)))%10**8}"
         changes.createOrReplaceTempView(view)
@@ -517,9 +511,40 @@ class IcebergTable:
         else:
             run()
             v = self.current_version()
+        if rejected is not None and batch_id is not None:
+            # after the MERGE, whose scan feeds ``seen``, and before the
+            # ``split: inline`` annotation: a replay of an annotated
+            # commit recomputes the split instead of reading this
+            try:
+                any_rejected = bool(seen.get.get("n"))
+            except Exception:  # zero-task MERGE: no metrics row came
+                any_rejected = not rejected.isEmpty()
+            if any_rejected:
+                self._write_sidecar(rejected, batch_id)
         if commit_info and v is not None:
             self.annotate_commit(v, commit_info)
         return v
+
+    def _write_sidecar(self, sidecar: DataFrame, batch_id: int | str) -> None:
+        """Append ``sidecar`` to the companion table under ``batch_id``,
+        replay-idempotent: any same-id rows are deleted first (a crash
+        between this write and the MERGE commit re-runs it; a plain
+        append would duplicate the split)."""
+        tagged = sidecar.withColumn("_sink_batch_id", F.lit(str(batch_id)))
+        try:
+            self.spark.sql(
+                f"DELETE FROM {self._sidecar_identifier} "
+                f"WHERE _sink_batch_id = '{_q(batch_id)}'"
+            )
+            tagged.writeTo(self._sidecar_identifier).append()
+        except Exception as e:
+            # only "table doesn't exist yet" falls through to create();
+            # any other failure (analysis error, transient executor
+            # death) must propagate — a blanket fallback masked the
+            # root cause behind TableAlreadyExists
+            if not _is_missing_table_error(e):
+                raise
+            tagged.writeTo(self._sidecar_identifier).create()
 
     def overwrite(self, df: DataFrame, batch_id: int | str | None = None) -> None:
         w = df.select([f.name for f in self.schema.fields]).writeTo(

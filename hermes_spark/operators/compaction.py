@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -76,16 +76,7 @@ def compact_events(
         aggs.append(F.max_by(c, F.col(offset_col)).alias(c))
 
     g = compactable.groupBy(*key).agg(*aggs)
-
-    first_ins = F.col("_first_op") == "insert"
-    last_del = F.col("_last_op") == "delete"
-
-    op = (
-        F.when(first_ins & last_del, F.lit(None))          # annihilate
-        .when(first_ins, F.lit("insert"))
-        .when(last_del, F.lit("delete"))
-        .otherwise(F.lit("update"))
-    )
+    op = compacted_op(F.col("_first_op"), F.col("_last_op"))
     out = g.withColumn(op_col, op).where(F.col(op_col).isNotNull()).drop(
         "_first_op", "_last_op"
     )
@@ -94,3 +85,16 @@ def compact_events(
             passthrough.select(*out.columns), allowMissingColumns=False
         )
     return out
+
+
+def compacted_op(first_op: Column, last_op: Column) -> Column:
+    """The truth table above on a run's first and last op; NULL when
+    the run annihilates (insert…delete)."""
+    first_ins = first_op == "insert"
+    last_del = last_op == "delete"
+    return (
+        F.when(first_ins & last_del, F.lit(None))          # annihilate
+        .when(first_ins, F.lit("insert"))
+        .when(last_del, F.lit("delete"))
+        .otherwise(F.lit("update"))
+    )

@@ -139,6 +139,72 @@ def _step(acc: Column, ev: Column) -> Column:
     )
 
 
+# the CDC op vocabulary, accepted as its _mergeEvents counterpart
+CDC_OPS = {"insert": "added", "update": "modified", "delete": "removed"}
+MAPS = ("attrs", "added", "modified", "removed")
+
+
+def fold_state(run: Column, has: Sequence[str]) -> Column:
+    """The pairwise ``_mergeEvents`` fold of one key's offset-ordered
+    array of event rows: structs with an ``op`` in either vocabulary
+    and, of the four maps, the ones named in ``has`` (the others read
+    empty).  Select it as a column, then ``finalize_fold`` it — so the
+    fold runs once per key."""
+    ev = F.transform(run, lambda r: F.struct(
+        F.coalesce(
+            *[F.when(r["op"] == a, F.lit(b)) for a, b in CDC_OPS.items()],
+            r["op"],
+        ).alias("op"),
+        *[(r[m] if m in has else _e()).alias(m) for m in MAPS],
+    ))
+    init = _state("empty", _e(), _e(), _e(), _e(), F.lit(False))
+    return F.aggregate(ev, init, _step)
+
+
+def finalize_fold(
+    s: Column, prior_attrs: Column | None = None
+) -> dict[str, Column]:
+    """The event a fold state stands for: op (NULL = no event), attrs,
+    added, modified, removed and violation.  ``prior_attrs`` (the
+    cached flat attrs, NULL = no cached object) turns a removed+added
+    run into modified(diff) (ref :259-347)."""
+    if prior_attrs is not None:
+        pr = F.coalesce(prior_attrs, _e())
+        has_prior = prior_attrs.isNotNull()
+    else:
+        pr = _e()
+        has_prior = F.lit(False)
+
+    fa = s["flat"]
+    # removed+added finalization: Event.fromDiffItem(new.diffFrom(current))
+    d_add = F.map_filter(fa, lambda k, _v: ~F.map_contains_key(pr, k))
+    d_mod = F.map_filter(fa, lambda k, v: F.map_contains_key(pr, k) & (pr[k] != v))
+    d_rem = F.map_filter(pr, lambda k, _v: ~F.map_contains_key(fa, k))
+    diff_empty = (F.size(d_add) == 0) & (F.size(d_mod) == 0) & (F.size(d_rem) == 0)
+
+    op = (
+        F.when(s["st"] == "added", F.lit("added"))
+        .when(s["st"] == "modified", F.lit("modified"))
+        .when(s["st"] == "removed", F.lit("removed"))
+        .when(s["st"] == "readded",
+              F.when(~has_prior, F.lit("added"))           # no cached object (ref warns)
+              .when(diff_empty, F.lit(None))               # empty diff → ignored (:333-347)
+              .otherwise(F.lit("modified")))
+        .otherwise(F.lit(None))                            # empty / annihilated
+    )
+    readded_mod = (s["st"] == "readded") & has_prior
+    return {
+        "op": op,
+        "attrs": F.when(s["st"] == "added", s["flat"])
+        .when(readded_mod, _e())
+        .when(s["st"] == "readded", s["flat"]).otherwise(_e()),
+        "added": F.when(readded_mod, d_add).otherwise(s["a"]),
+        "modified": F.when(readded_mod, d_mod).otherwise(s["m"]),
+        "removed": F.when(readded_mod, d_rem).otherwise(s["r"]),
+        "violation": s["viol"],
+    }
+
+
 def compact_events_map(
     events: DataFrame,
     key: Sequence[str],
@@ -165,78 +231,41 @@ def compact_events_map(
     modified diff (ref :333-347) produce no row.
     """
     key = list(key)
+    cols = dict(zip(MAPS, (attrs_col, added_col, modified_col, removed_col)))
+    has = [m for m, c in cols.items() if c in events.columns]
     ev = F.struct(
-        F.col(op_col).alias("op"),
-        F.col(attrs_col).alias("attrs") if attrs_col in events.columns
-        else _e().alias("attrs"),
-        F.col(added_col).alias("added") if added_col in events.columns
-        else _e().alias("added"),
-        F.col(modified_col).alias("modified") if modified_col in events.columns
-        else _e().alias("modified"),
-        F.col(removed_col).alias("removed") if removed_col in events.columns
-        else _e().alias("removed"),
-    )
-    # comparator touches only `off`: structs holding maps have no
-    # default ordering, and event payload order must not matter anyway
-    by_off = lambda l, r: (  # noqa: E731
-        F.when(l["off"] < r["off"], F.lit(-1))
-        .when(l["off"] > r["off"], F.lit(1))
-        .otherwise(F.lit(0))
+        F.col(op_col).alias("op"), *[F.col(cols[m]).alias(m) for m in has]
     )
     runs = events.groupBy(*key).agg(
         F.array_sort(
             F.collect_list(F.struct(F.col(offset_col).alias("off"), ev.alias("ev"))),
-            by_off,
+            by_offset,
         ).alias("_run"),
         F.max(offset_col).alias(offset_col),
     )
-    init = _state("empty", _e(), _e(), _e(), _e(), F.lit(False))
     folded = runs.select(
-        *key,
-        offset_col,
-        F.aggregate(F.col("_run"), init, lambda acc, x: _step(acc, x["ev"])).alias("_s"),
+        *key, offset_col,
+        fold_state(F.transform("_run", lambda x: x["ev"]), has).alias("_s"),
     )
-
-    s = F.col("_s")
+    prior_attrs = None
     if prior is not None:
         p = prior.select(
             *key, F.col(prior_attrs_col).alias("_prior_attrs")
         )
         folded = folded.join(p, key, "left_outer")
-        pr = F.coalesce(F.col("_prior_attrs"), _e())
-        has_prior = F.col("_prior_attrs").isNotNull()
-    else:
-        pr = _e()
-        has_prior = F.lit(False)
+        prior_attrs = F.col("_prior_attrs")
+    out = finalize_fold(F.col("_s"), prior_attrs)
+    return folded.select(
+        *key, offset_col, *[c.alias(n) for n, c in out.items()]
+    ).where(F.col("op").isNotNull())
 
-    fa = s["flat"]
-    # removed+added finalization: Event.fromDiffItem(new.diffFrom(current))
-    d_add = F.map_filter(fa, lambda k, _v: ~F.map_contains_key(pr, k))
-    d_mod = F.map_filter(fa, lambda k, v: F.map_contains_key(pr, k) & (pr[k] != v))
-    d_rem = F.map_filter(pr, lambda k, _v: ~F.map_contains_key(fa, k))
-    diff_empty = (F.size(d_add) == 0) & (F.size(d_mod) == 0) & (F.size(d_rem) == 0)
 
-    op = (
-        F.when(s["st"] == "added", F.lit("added"))
-        .when(s["st"] == "modified", F.lit("modified"))
-        .when(s["st"] == "removed", F.lit("removed"))
-        .when(s["st"] == "readded",
-              F.when(~has_prior, F.lit("added"))           # no cached object (ref warns)
-              .when(diff_empty, F.lit(None))               # empty diff → ignored (:333-347)
-              .otherwise(F.lit("modified")))
-        .otherwise(F.lit(None))                            # empty / annihilated
+def by_offset(left: Column, right: Column) -> Column:
+    """``array_sort`` comparator on the ``off`` field alone: structs
+    holding maps have no default ordering, and event payload order
+    must not matter anyway."""
+    return (
+        F.when(left["off"] < right["off"], F.lit(-1))
+        .when(left["off"] > right["off"], F.lit(1))
+        .otherwise(F.lit(0))
     )
-    readded_mod = (s["st"] == "readded") & has_prior
-    out = folded.select(
-        *key,
-        offset_col,
-        op.alias("op"),
-        F.when(s["st"] == "added", s["flat"])
-        .when(readded_mod, _e())
-        .when(s["st"] == "readded", s["flat"]).otherwise(_e()).alias("attrs"),
-        F.when(readded_mod, d_add).otherwise(s["a"]).alias("added"),
-        F.when(readded_mod, d_mod).otherwise(s["m"]).alias("modified"),
-        F.when(readded_mod, d_rem).otherwise(s["r"]).alias("removed"),
-        s["viol"].alias("violation"),
-    )
-    return out.where(F.col("op").isNotNull())

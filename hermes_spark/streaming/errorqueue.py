@@ -3,8 +3,8 @@ enqueue-time compaction — the reference's error-queue machinery
 (/root/reference/clients/errorqueue.py) as table operations.
 
 Model: failed change events land in a dead-letter table
-(key..., offset, op, payload..., err, step, partially_processed,
-enqueue_batch).  Retry passes drain it in dependency order:
+(key..., offset, op, payload..., err, step, partially_processed).
+Retry passes drain it in dependency order:
 
   1. candidates = oldest event per key (W3, errorqueue.py:611-641)
      minus keys that are FK-parents of other errored keys
@@ -14,39 +14,45 @@ enqueue_batch).  Retry passes drain it in dependency order:
   3. repeat while progress is made (the reference's multi-pass drain,
      clients/__init__.py:741-753).
 
-Enqueue-time autoremediation: events for a key already in the queue
-are compacted with the queued ones (first/last-state truth table —
-``compact_events`` — or the full field-level ``_mergeEvents`` fold,
-errorqueue.py:187-417).  Keys holding a partially-processed event are
-never compacted (the reference refuses to merge them,
-errorqueue.py:437-460), and the newest error text + step survive the
-fold (errorqueue.py:463-501 keeps and updates them per retry).
+Enqueue-time autoremediation (``enqueue``): events for a key already
+in the queue are compacted with the queued ones (first/last-state
+truth table, as ``compact_events``, or the full field-level
+``_mergeEvents`` fold, errorqueue.py:187-417).
 
 Enqueue-time FK policy (``foreignkeys_policy``, reference
-clients/__init__.py:133-141, applied at :1020 and :1153): an incoming
-event is diverted to the queue up-front when (a) its own key already
-has queued events (per-key FIFO), or (b) its object is the FK-parent
-of an object already in the queue AND its op is in the policy set —
-``disabled`` (never), ``on_remove_event`` (deletes only),
-``on_every_event`` (all ops).  ``gate_incoming`` splits a batch
-accordingly.
+clients/__init__.py:133-141): ``gate_incoming`` diverts an incoming
+event up-front when its key is queued (per-key FIFO) or its object is
+the FK-parent of a queued one and its op is in the policy set —
+``disabled`` (never), ``on_remove_event`` (deletes), ``on_every_event``.
 
-Scale: all queue writes are MERGE *deltas* keyed on (key..., offset) —
-O(affected keys) per enqueue/resolve, never an O(queue) rewrite.  The
-table's own ``op`` column is the *event* op, so the MERGE uses a
-separate ``_qop`` channel for upsert/delete-row semantics.  Read
-amplification is bounded out-of-band via ``maintain()``.
+Scale: queue writes are MERGE *deltas* keyed on (key..., offset) —
+O(affected keys) per enqueue/resolve.  The table's own ``op`` column is
+the *event* op, so the MERGE uses a separate ``_qop`` channel for
+upsert/delete-row semantics.  A drain that moved rows hands the rows
+it left to ``maintain()``, which rewrites them as the one base.
+
+Cost model — every operation reads its inputs once, in a fixed number
+of Spark jobs (adaptive execution runs each shuffle stage as a job):
+``enqueue`` ≤ 3 jobs into an empty queue (a never-written table reads
+as a task-free empty relation), ≤ 4 otherwise (one queue fold, one
+keyed pass, one write); ``gate_incoming`` runs none itself, and either
+side of its split materializes in ≤ 4; one ``drain`` pass through
+``pipeline.drain_queue`` — validate, apply, resolve, compact — ≤ 15,
+folding the queue once.  Pinned by ``tests/test_error_path_jobs.py``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hermes_spark.operators.compaction import compact_events
+from hermes_spark.operators.compaction import compacted_op
+from hermes_spark.operators.eventmerge import (
+    by_offset, finalize_fold, fold_state,
+)
 from hermes_spark.operators.ordering import unblocked_retry_candidates
 from hermes_spark.tables import ParquetMergeTable
 
@@ -89,22 +95,19 @@ class DeadLetterQueue:
                 T.StructField("partially_processed", T.BooleanType(), True),
             ]
         )
-        # compaction of the queue table itself is out-of-band
-        # (maintain()) — enqueue/resolve stay O(affected)
+        # the queue table never self-compacts: see drain/maintain
         self.table = ParquetMergeTable(
             spark, path, key=self.key + ["offset"],
             schema=T.StructType(fields), compact_every=None,
         )
         self.spark = spark
-        # driver-side emptiness hint (None = unknown).  The healthy
-        # steady state of a stream is an EMPTY queue, and per-key FIFO
-        # gating against an empty queue is a provable no-op — the sink
-        # uses this hint to skip the whole gating plan (reference: the
-        # client only consults its error queue when it has entries,
-        # clients/__init__.py:1020).  Never wrongly True: rows enter
-        # only through enqueue(), which latches it False; True comes
-        # only from a never-written table, a measured empty read, or a
-        # drain that returned zero rows.
+        # driver-side emptiness hint (None = unknown).  A healthy
+        # stream's queue is EMPTY, and gating against an empty queue is
+        # a provable no-op — the sink skips the whole gating plan then
+        # (the reference client only consults a non-empty queue,
+        # clients/__init__.py:1020).  Never wrongly True: enqueue()
+        # latches it False; True comes only from a never-written
+        # table, a measured empty read, or a drain that left no rows.
         self._empty_hint: bool | None = None
 
     def known_empty(self) -> bool:
@@ -126,31 +129,29 @@ class DeadLetterQueue:
         """Fill optional metadata columns absent from the caller's
         frame (err/step/partially_processed are part of the queue
         schema but not every producer carries them)."""
-        for f in self.table.schema.fields:
-            if f.name not in df.columns:
-                df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-        return df.select(*self._fields)
+        return df.select(*[
+            (F.col(f.name) if f.name in df.columns else F.lit(None))
+            .cast(f.dataType).alias(f.name)
+            for f in self.table.schema.fields
+        ])
 
     def _deletes_for(self, rows: DataFrame) -> DataFrame:
-        """Null-padded delete rows for the given (key..., offset)s —
-        the MERGE-channel tombstones that remove queue entries."""
-        out = rows.select(*self.key, "offset")
-        for f in self.table.schema.fields:
-            if f.name not in (*self.key, "offset"):
-                out = out.withColumn(f.name, F.lit(None).cast(f.dataType))
-        return out.select(*self._fields).withColumn("_qop", F.lit("delete"))
+        """The MERGE-channel tombstones that remove these queue rows."""
+        return rows.select(*self._fields, F.lit("delete").alias("_qop"))
 
     def read(self) -> DataFrame:
         # the queue's own `op` is the EVENT op; row liveness rides the
         # out-of-schema `_qop` channel recorded per delta
         return self.table.read(op_col="_qop")
 
-    def maintain(self) -> None:
-        """Out-of-band queue compaction (fold deltas into a base) plus
-        snapshot GC.  Not ``table.compact()``: that folds liveness
-        through the schema's ``op`` column, which here is the EVENT op
-        — a queued delete-event must survive compaction."""
-        self.table.overwrite(self.read().repartition(1))
+    def maintain(self, rows: DataFrame | None = None) -> None:
+        """Queue compaction (``rows``, default the folded queue, become
+        the one-file base) plus snapshot GC.  Not ``table.compact()``:
+        that folds liveness through the schema's ``op`` column, which
+        here is the EVENT op — a queued delete-event must survive."""
+        self.table.overwrite(
+            (self.read() if rows is None else rows).coalesce(1)
+        )
         self.table.vacuum(retain_superseded=1)
 
     # -- enqueue-time FK policy ----------------------------------------
@@ -169,13 +170,10 @@ class DeadLetterQueue:
         all its later events divert too (in the reference they would
         find the key queued); earlier ones process normally."""
         cur = self.read()
-        neg_inf = F.lit(-(1 << 62)).cast("long")
-        # per-key gate threshold = offset of the first diverted event
-        thr = (
-            events.join(cur.select(*self.key).distinct(), self.key, "left_semi")
-            .select(*self.key)
-            .distinct()
-            .withColumn("_thr", neg_inf)  # key already queued: gate all
+        # per-key gate threshold = offset of the first diverted event;
+        # a key already queued gates all its events
+        thr = cur.select(*self.key).distinct().withColumn(
+            "_thr", F.lit(-(1 << 62)).cast("long")
         )
         kinds = FOREIGNKEYS_POLICIES[self.foreignkeys_policy]
         if kinds and self.fk_map:
@@ -191,8 +189,9 @@ class DeadLetterQueue:
                 .groupBy(*self.key)
                 .agg(F.min(order_col).cast("long").alias("_thr"))
             )
-            thr = thr.unionByName(parent_hits)
-        thr = thr.groupBy(*self.key).agg(F.min("_thr").alias("_thr"))
+            thr = thr.unionByName(parent_hits).groupBy(*self.key).agg(
+                F.min("_thr").alias("_thr")
+            )
         ev = events.join(thr, self.key, "left")
         gate = F.col("_thr").isNotNull() & (
             F.col(order_col).cast("long") >= F.col("_thr")
@@ -201,7 +200,7 @@ class DeadLetterQueue:
         process = ev.where(~F.coalesce(gate, F.lit(False))).drop("_thr")
         return process, enqueue
 
-    # -- writes (all MERGE deltas, O(affected)) -------------------------
+    # -- writes (MERGE deltas, O(affected); a drain also rebases) ---------
 
     def enqueue(
         self,
@@ -216,18 +215,18 @@ class DeadLetterQueue:
 
         ``field_level=True`` applies the reference's FULL ``_mergeEvents``
         semantics (errorqueue.py:187-417) instead of the op truth table:
-        the payload schema must carry the four map columns
-        (attrs, added, modified, removed), and ``prior`` (key → cached
-        flat attrs map) finalizes removed+added runs into modified-diff
-        events exactly like the reference reads its cache.  Keys with a
-        partially-processed event pass through uncompacted
-        (errorqueue.py:437-460), and the newest error text + step
-        survive the fold (errorqueue.py:463-501)."""
+        the payload carries the map columns (attrs, added, modified,
+        removed), and ``prior`` (key → cached flat attrs map) finalizes
+        removed+added runs into modified-diff events like the
+        reference's cache read.  Keys with a partially-processed event
+        pass through uncompacted (errorqueue.py:437-460); the newest
+        error text + step survive the fold (errorqueue.py:463-501).
+
+        One ``groupBy(key)`` over (queue ∪ failed) folds each touched
+        key's offset-ordered run and emits, in the same pass, its
+        surviving event and tombstones for the queue rows it replaces."""
         fields = self._fields
         failed = self._conform(failed)
-        fkeys = failed.select(*self.key).distinct()
-        affected = self.read().join(fkeys, self.key, "left_semi")
-
         if not autoremediate:
             self.table.merge(
                 failed.withColumn("_qop", F.lit("put")).repartition(1),
@@ -236,121 +235,92 @@ class DeadLetterQueue:
             self._empty_hint = False
             return
 
-        merged = affected.unionByName(failed)
+        def entries(df: DataFrame, queued: bool) -> DataFrame:
+            return df.select(*self.key, F.struct(
+                F.col("offset").alias("off"), F.struct(*fields).alias("r"),
+                F.lit(queued).alias("q"),
+            ).alias("e"))
+
+        g = (
+            entries(self.read(), True).unionByName(entries(failed, False))
+            .groupBy(*self.key)
+            .agg(F.array_sort(F.collect_list("e"), by_offset).alias("run"))
+            .where(F.exists("run", lambda x: ~x["q"]))  # touched keys only
+        )
+        run = F.col("run")
+        last = F.get(run, F.size(run) - 1)
+
+        def newest(c: str) -> Column:
+            # the newest NON-NULL value: gated events carry err=NULL,
+            # step=NULL — they must not wipe the retry metadata
+            hits = F.filter(run, lambda x: x["r"][c].isNotNull())
+            return F.get(hits, F.size(hits) - 1)["r"][c]
+
+        fold = {"err": newest("err"), "step": newest("step")}
         if field_level:
-            from hermes_spark.operators.eventmerge import compact_events_map
-
-            pp = F.coalesce(F.col("partially_processed"), F.lit(False))
-            pp_keys = merged.where(pp).select(*self.key).distinct()
-            passthrough = merged.join(pp_keys, self.key, "left_semi")
-            foldable = merged.join(pp_keys, self.key, "left_anti")
-            # accept CDC op vocabulary too (insert/update/delete)
-            tr = foldable.withColumn(
-                "op",
-                F.when(F.col("op") == "insert", F.lit("added"))
-                .when(F.col("op") == "update", F.lit("modified"))
-                .when(F.col("op") == "delete", F.lit("removed"))
-                .otherwise(F.col("op")),
+            g = g.withColumn("_s", fold_state(
+                F.transform(run, lambda x: x["r"]), fields
+            ))
+            if prior is not None:
+                g = g.join(prior.select(
+                    *self.key, F.col("attrs").alias("_prior")
+                ), self.key, "left")
+            out = finalize_fold(
+                F.col("_s"), F.col("_prior") if prior is not None else None
             )
-            folded = compact_events_map(
-                tr, self.key, offset_col="offset", prior=prior
-            )
-            # newest NON-NULL error text + step survive the fold
-            # (gated events carry err=NULL, step=NULL — they must not
-            # wipe the retry metadata; reference errorqueue.py:463-501)
-            meta = foldable.groupBy(*self.key).agg(
-                F.max_by(
-                    "err",
-                    F.when(F.col("err").isNotNull(), F.col("offset")),
-                ).alias("err"),
-                F.max_by(
-                    "step",
-                    F.when(F.col("step").isNotNull(), F.col("offset")),
-                ).alias("step"),
-            )
-            new_rows = (
-                folded.join(meta, self.key, "left")
-                .withColumn("partially_processed", F.lit(False))
-                .select(*fields)
-                .unionByName(passthrough.select(*fields))
-            )
+            fold.update({c: out[c] for c in out if c in fields})
+            fold["partially_processed"] = F.lit(False)
         else:
-            payload_cols = [
-                c for c in fields if c not in (*self.key, "offset", "op")
-            ]
-            compacted = compact_events(
-                merged,
-                self.key,
-                op_col="op",
-                offset_col="offset",
-                payload_cols=payload_cols,
-                partially_processed_col="partially_processed",
-            )
-            # the newest NON-NULL error text + step survive the fold
-            # (reference errorqueue.py:463-501 keeps and updates them
-            # per retry) — compact_events's plain max_by would take the
-            # literally-last event's values, and gated events enqueue
-            # with err=NULL, wiping the message.  Keys holding a
-            # partially-processed event pass through compact_events
-            # row-by-row and keep their per-row err/step.
-            meta = merged.groupBy(*self.key).agg(
-                F.max_by(
-                    "err", F.when(F.col("err").isNotNull(), F.col("offset"))
-                ).alias("_m_err"),
-                F.max_by(
-                    "step", F.when(F.col("step").isNotNull(), F.col("offset"))
-                ).alias("_m_step"),
-                F.max(
-                    F.coalesce(F.col("partially_processed"), F.lit(False))
-                ).alias("_m_pp"),
-            )
-            new_rows = (
-                compacted.join(meta, self.key, "left")
-                .withColumn(
-                    "err",
-                    F.when(F.col("_m_pp"), F.col("err")).otherwise(F.col("_m_err")),
-                )
-                .withColumn(
-                    "step",
-                    F.when(F.col("_m_pp"), F.col("step")).otherwise(F.col("_m_step")),
-                )
-                .select(*fields)
-            )
+            fold["op"] = compacted_op(run[0]["r"]["op"], last["r"]["op"])
+        survivor, op = last["r"], fold["op"]
+        for c, v in fold.items():
+            survivor = survivor.withField(c, v)
 
-        # MERGE delta: upsert the surviving rows, tombstone the affected
-        # queue rows whose (key, offset) did not survive the compaction
-        dead = affected.join(
-            new_rows.select(*self.key, "offset"),
-            [*self.key, "offset"],
-            "left_anti",
-        )
-        changes = new_rows.withColumn("_qop", F.lit("put")).unionByName(
-            self._deletes_for(dead)
-        )
-        # one file per queue delta: the queue is O(#failing keys) by the
-        # compaction contract above, but an un-repartitioned write emits
-        # one file per PLAN partition — a tiny-file explosion that makes
-        # queue disk usage grow with shuffle width, not queue size.
-        # repartition (not coalesce) keeps the fold itself parallel.
+        def qop(r: Column, kind: str) -> Column:
+            return F.struct(r.alias("r"), F.lit(kind).alias("_qop"))
+
+        # a key holding a partially-processed event is not compacted:
+        # its new events are put as they are.  Any other key puts its
+        # survivor (none if the run annihilates) and tombstones every
+        # queued row the survivor does not overwrite.
+        pp = F.exists(run, lambda x: F.coalesce(
+            x["r"]["partially_processed"], F.lit(False)
+        ))
+        emit = F.when(pp, F.transform(
+            F.filter(run, lambda x: ~x["q"]), lambda x: qop(x["r"], "put")
+        )).otherwise(F.concat(
+            F.filter(F.array(qop(survivor, "put")), lambda _: op.isNotNull()),
+            F.transform(F.filter(run, lambda x: x["q"] & (
+                op.isNull() | (x["off"] != last["off"])
+            )), lambda x: qop(x["r"], "delete")),
+        ))
+        changes = g.select(F.explode(emit).alias("x")).select("x.r.*", "x._qop")
+        # one file per queue delta (an un-repartitioned write emits one
+        # per PLAN partition: queue disk would grow with shuffle width);
+        # repartition, not coalesce, keeps the fold itself parallel
         self.table.merge(
             changes.repartition(1), batch_id=batch_id, op_col="_qop"
         )
         self._empty_hint = False
 
-    def retry_candidates(self) -> DataFrame:
+    def retry_candidates(self, queue: DataFrame | None = None) -> DataFrame:
         return unblocked_retry_candidates(
-            self.read(), self.key, parent_key_of=self.fk_map or None,
-            order_col="offset",
+            self.read() if queue is None else queue, self.key,
+            parent_key_of=self.fk_map or None, order_col="offset",
         )
 
     def resolve(
-        self, succeeded_keys: DataFrame, batch_id: int | str | None = None
+        self, succeeded_keys: DataFrame, batch_id: int | str | None = None,
+        queue: DataFrame | None = None,
     ) -> None:
         """Remove events whose key succeeded — one MERGE delta of
-        tombstones, O(affected)."""
-        gone = self.read().join(succeeded_keys, self.key, "left_semi")
+        tombstones, O(affected), in one file.  ``queue``: a persisted
+        ``read()`` to take them from."""
+        gone = (self.read() if queue is None else queue).join(
+            succeeded_keys, self.key, "left_semi"
+        )
         self.table.merge(
-            self._deletes_for(gone).repartition(1),
+            self._deletes_for(gone).coalesce(1),
             batch_id=batch_id, op_col="_qop",
         )
         self._empty_hint = None  # only removed rows — may now be empty
@@ -363,14 +333,35 @@ class DeadLetterQueue:
         """Multi-pass dependency-ordered drain: each pass retries the
         unblocked head of every key; ``apply_fn`` returns the key rows
         that succeeded.  Stops when a pass makes no progress (which
-        also covers the empty queue) — ONE action per pass.  Returns
-        rows remaining."""
-        for _ in range(max_passes):
-            cands = self.retry_candidates()
-            ok = apply_fn(cands).select(*self.key).distinct()
-            if ok.count() == 0:
-                break
-            self.resolve(ok)
-        left = self.read().count()
+        also covers the empty queue) or empties the queue.  A pass
+        folds the queue once (persisted): candidates, tombstones and
+        the rows left all come from that fold.  When a pass moved rows,
+        the rows left then become the queue's new base (no re-fold) and
+        superseded snapshots expire — an idle queue never rewrites
+        itself.  Returns rows remaining."""
+        held: list[DataFrame] = []
+        left = None  # rows left after the last pass that moved some
+        try:
+            for _ in range(max_passes):
+                queue = rest = self.read().persist()
+                held.append(queue)
+                ok = apply_fn(self.retry_candidates(queue)).select(*self.key)
+                if ok.isEmpty():
+                    break
+                self.resolve(ok, queue=queue)
+                rest = queue.join(ok, self.key, "left_anti").persist()
+                held.append(rest)
+                left = rest.count()
+                if left == 0:
+                    break
+            if left is not None:
+                self.maintain(rest)
+        finally:
+            for df in held:
+                df.unpersist()
+        if left is None:
+            # no pass moved anything: count afresh (``apply_fn`` may
+            # have re-enqueued its failures with a new error)
+            left = self.read().count()
         self._empty_hint = left == 0
         return left

@@ -49,7 +49,6 @@ def drain_queue(
     Returns the rows left in the queue."""
     import time
 
-    progress = {"applied": False}
     cached: list[DataFrame] = []
 
     def apply_fn(cands: DataFrame) -> DataFrame:
@@ -77,19 +76,13 @@ def drain_queue(
         # lineage/metrics surfaces like any other commit (the
         # reference counts retried events in its status counters)
         sink._apply(ok.select(*fields), bid, time.monotonic())
-        progress["applied"] = True
         return ok
 
     try:
-        left = dlq.drain(apply_fn, max_passes=max_passes)
+        return dlq.drain(apply_fn, max_passes=max_passes)
     finally:
         for df in cached:
             df.unpersist()
-    if progress["applied"]:
-        # queue compaction only when the pass moved something — an
-        # idle queue must not rewrite itself every trigger
-        dlq.maintain()
-    return left
 
 
 @dataclass

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hermes_spark.operators.ordering import with_apply_order
-from hermes_spark.tables import ParquetMergeTable
+from hermes_spark.tables import ParquetMergeTable, empty_frame
 
 # batch ids are int|str in the ledger (streaming batch numbers, but
 # also "dlq-<tag>-p<n>" drain merges and "sink-N" queue entries) — the
@@ -204,18 +204,20 @@ class ExactlyOnceSink:
         # provably EMPTY, gating is a no-op (no key can be queued, no
         # FK-parent can be errored) and the split collapses to the
         # validator alone, which is DETERMINISTIC in the batch.  Then:
-        # no gating joins, no persist, no sidecar write — the failure
-        # count rides the delta-write job as a second Observation, and
-        # a crash-replay recomputes the identical split (the commit
-        # line carries a ``split: inline`` marker so the replay can
-        # tell this from an expired sidecar).  One Spark job per
-        # healthy micro-batch, same as a plain sink.
+        # no gating joins, no persist — the delta write keeps the
+        # rejected rows (if any) as its sidecar in the same job, and a
+        # replay without them recomputes the identical split (the
+        # commit line carries a ``split: inline`` marker).  One Spark
+        # job per micro-batch, same as a plain sink.
         if not t_done:
             if self.transform is not None:
                 changes = self.transform(changes)
-            if self.dlq.known_empty() and getattr(
-                self.target, "commit_info_of_batch", None
-            ) is not None:
+            if (
+                self.dlq.known_empty()
+                and self.assume_unique_keys  # per-key dedupe spans the split
+                and getattr(self.target, "commit_info_of_batch", None)
+                is not None
+            ):
                 self._apply_inline_split(changes, batch_id, t0, q_done)
                 return
             # persist the classified batch: the split produces THREE
@@ -234,14 +236,7 @@ class ExactlyOnceSink:
                     # the frame we just persisted as the commit sidecar
                     # IS the split — no read-back needed on the normal
                     # path (the parquet round-trip is for replays only)
-                    if to_enqueue.isEmpty():
-                        # healthy batch, nothing diverted: close the
-                        # queue ledger with a zero-job latch
-                        self.dlq.table.mark_batch(f"sink-{batch_id}")
-                    else:
-                        self.dlq.enqueue(
-                            to_enqueue, batch_id=f"sink-{batch_id}"
-                        )
+                    self._enqueue_split(batch_id, to_enqueue)
             finally:
                 changes.unpersist()
                 if to_enqueue is not None:
@@ -249,13 +244,6 @@ class ExactlyOnceSink:
         elif not q_done:
             # replay after a crash between target-commit and
             # queue-commit: re-enqueue the ORIGINAL persisted split
-            persisted = self.target.read_sidecar_of_batch(batch_id)
-            if persisted is not None:
-                if persisted.isEmpty():
-                    self.dlq.table.mark_batch(f"sink-{batch_id}")
-                else:
-                    self.dlq.enqueue(persisted, batch_id=f"sink-{batch_id}")
-                return
             info = (
                 self.target.commit_info_of_batch(batch_id)
                 if getattr(self.target, "commit_info_of_batch", None)
@@ -267,11 +255,11 @@ class ExactlyOnceSink:
                 # deterministic in the replayed batch — recompute it
                 if self.transform is not None:
                     changes = self.transform(changes)
-                bad = self._validator_failures(changes)
-                if bad.isEmpty():
-                    self.dlq.table.mark_batch(f"sink-{batch_id}")
-                else:
-                    self.dlq.enqueue(bad, batch_id=f"sink-{batch_id}")
+                self._enqueue_split(batch_id, self._validator_failures(changes))
+                return
+            persisted = self.target.read_sidecar_of_batch(batch_id)
+            if persisted is not None:
+                self._enqueue_split(batch_id, persisted)
             else:
                 # the split expired (vacuum retention / purge_columns
                 # ran during the downtime): there is nothing left to
@@ -290,50 +278,48 @@ class ExactlyOnceSink:
         )
         return F.coalesce(ok, F.lit(True))
 
+    @staticmethod
+    def _as_failures(rejected: DataFrame) -> DataFrame:
+        """Validator rejects as queue events: offset = event-time micros
+        (the last-writer order the classifier already enforces).  Both
+        names are queue columns, so no payload carries them."""
+        return rejected.withColumn(
+            "offset", F.unix_micros(F.col("ts"))
+        ).withColumn("err", F.lit("validation failed"))
+
     def _validator_failures(self, changes: DataFrame) -> DataFrame:
         """The validator-only enqueue frame (no gating) — the fast
         path's split, recomputable deterministically on replay."""
-        return (
-            changes.where(~self._validator_ok(changes))
-            .withColumn("offset", F.unix_micros(F.col("ts")))
-            .withColumn("err", F.lit("validation failed"))
-        )
+        return self._as_failures(changes.where(~self._validator_ok(changes)))
+
+    def _enqueue_split(self, batch_id: int, failed: DataFrame | None) -> None:
+        if failed is None or failed.isEmpty():
+            self.dlq.table.mark_batch(f"sink-{batch_id}")
+        else:
+            self.dlq.enqueue(failed, batch_id=f"sink-{batch_id}")
 
     def _apply_inline_split(
         self, changes: DataFrame, batch_id: int, t0: float, q_done: bool
     ) -> None:
         """The empty-queue fast path: ONE Spark job for a healthy
-        micro-batch.  The validator verdict splits the plan before the
-        delta write; the failure count rides the same job as a second
-        aggregate on the pre-filter frame; the commit line carries
-        ``split: inline`` so a crash-replay knows the split is
+        micro-batch on a local target, no persist.  The delta write
+        splits on the verdict — accepted rows form the delta, rejected
+        rows (as queue events, the persisted split's shape) its sidecar,
+        in the same job — so the stateful classifier runs once even
+        when rows fail: every further read of ``changes`` would re-run
+        it (with a state-store load and changelog replay).  The commit
+        carries ``split: inline`` so a crash-replay knows the split is
         recomputable (deterministic — no queue state involved)."""
-        ev = changes.withColumn("_ok", self._validator_ok(changes))
-        obs = Observation(f"split_{batch_id}")
-        ev = ev.observe(
-            obs, F.sum((~F.col("_ok")).cast("long")).alias("bad")
+        ev = self._as_failures(
+            changes.withColumn("_ok", self._validator_ok(changes))
         )
-        process = ev.where(F.col("_ok")).drop("_ok")
         self._apply(
-            process, batch_id, t0, commit_info={"split": "inline"}
+            ev, batch_id, t0, commit_info={"split": "inline"}, split="_ok"
         )
-        if q_done:
-            return
-        try:
-            n_bad = dict(obs.get).get("bad", 0) or 0
-        except Exception:
-            # zero-task delta write (all-stale batch on a partitioned
-            # target) — the observation never materialized; decide
-            # with an explicit probe instead
-            n_bad = None
-        if n_bad == 0:
-            self.dlq.table.mark_batch(f"sink-{batch_id}")
-            return
-        bad = self._validator_failures(changes)
-        if n_bad is None and bad.isEmpty():
-            self.dlq.table.mark_batch(f"sink-{batch_id}")
-        else:
-            self.dlq.enqueue(bad, batch_id=f"sink-{batch_id}")
+        if not q_done:
+            self._enqueue_split(
+                batch_id, self.target.read_sidecar_of_batch(batch_id)
+            )
 
     def _split_failures(self, changes: DataFrame):
         """Reference client loop (clients/__init__.py:913-1020): rows
@@ -369,12 +355,19 @@ class ExactlyOnceSink:
         t0: float,
         sidecar: DataFrame | None = None,
         commit_info: dict | None = None,
+        split: str | None = None,
     ) -> None:
+        """Observed MERGE of ``changes``; with ``split`` (a boolean
+        column) only its true rows merge and count, and the false rows —
+        queue events — land in the commit's sidecar."""
         if self.evolve_on_new_columns:
             known = {f.name for f in self.target.schema.fields}
+            skip = {self.type_col, split, "offset", "err"} if split else {
+                self.type_col
+            }
             extra = [
                 f for f in changes.schema.fields
-                if f.name not in known and f.name != self.type_col
+                if f.name not in known and f.name not in skip
             ]
             if extra:
                 # idempotent under replay-after-crash: once evolved, the
@@ -385,11 +378,14 @@ class ExactlyOnceSink:
         if not self.assume_unique_keys:
             changes = _latest_change_per_key(changes, self.target.key)
         obs = Observation(f"lineage_{batch_id}")
-        aggs = [
-            F.count(F.lit(1)).alias("rows"),
-            F.sum((F.col("op") == "insert").cast("long")).alias("inserts"),
-            F.sum((F.col("op") == "update").cast("long")).alias("updates"),
-            F.sum((F.col("op") == "delete").cast("long")).alias("deletes"),
+        kept = F.col(split) if split else F.lit(True)
+
+        def n(cond):
+            return F.sum((kept & cond).cast("long"))
+
+        aggs = [n(F.lit(True)).alias("rows")] + [
+            n(F.col("op") == o).alias(f"{o}s")
+            for o in ("insert", "update", "delete")
         ]
         # per-objtype counters: static count_ifs per declared (type,
         # op) pair, riding the same single job — NOT a groupBy (that
@@ -405,17 +401,14 @@ class ExactlyOnceSink:
         for i, t in enumerate(per_type):
             for opname in ops:
                 aggs.append(
-                    F.sum(
-                        (
-                            (F.col(self.type_col) == t)
-                            & (F.col("op") == opname)
-                        ).cast("long")
+                    n(
+                        (F.col(self.type_col) == t) & (F.col("op") == opname)
                     ).alias(f"bt_{i}_{opname}")
                 )
         observed = changes.observe(obs, *aggs)
         committed = self.target.merge(
             changes=observed, batch_id=batch_id, sidecar=sidecar,
-            commit_info=commit_info,
+            commit_info=commit_info, split=split,
         )
         if committed is not None:
             try:
@@ -506,7 +499,7 @@ class ExactlyOnceSink:
                 .select("batch_id", "partition_id", "op", "rows")
             )
         if not parts:
-            return spark.createDataFrame([], PARTITION_METRICS_SCHEMA)
+            return empty_frame(spark, PARTITION_METRICS_SCHEMA)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

@@ -31,10 +31,23 @@ from collections import deque
 from pyspark.sql.streaming import StreamingQueryListener
 
 
+# RocksDB state-store custom metrics: loading the state version a
+# trigger starts from, and writing the trigger's changelog at commit
+STATE_CUSTOM_METRICS = {
+    "state_load_ms": "rocksdbLoadLatencyMs",
+    "changelog_commit_ms": "rocksdbChangeLogWriterCommitLatencyMs",
+}
+
+
 def _progress_row(p) -> dict:
     """Flatten a StreamingQueryProgress into the fields the reference's
-    status surface shows (counts, rates, phase timings, state size)."""
+    status surface shows (counts, rates, phase timings, state size),
+    plus where the state store's time and memory went, summed over
+    operators.  A stateful operator that re-runs inside one trigger
+    (each extra read of the foreachBatch frame re-executes it) shows as
+    a multiple of the usual rows total and load time."""
     state = p.stateOperators or []
+    custom = [s.customMetrics or {} for s in state]
     return {
         "event": "progress",
         "query_id": str(p.id),
@@ -47,6 +60,12 @@ def _progress_row(p) -> dict:
         "duration_ms": dict(p.durationMs or {}),
         "state_rows_total": sum(s.numRowsTotal for s in state),
         "state_rows_updated": sum(s.numRowsUpdated for s in state),
+        "state_commit_ms": sum(s.commitTimeMs for s in state),
+        "state_memory_bytes": sum(s.memoryUsedBytes for s in state),
+        **{
+            k: sum(int(c.get(m, 0)) for c in custom)
+            for k, m in STATE_CUSTOM_METRICS.items()
+        },
         "watermark": (p.eventTime or {}).get("watermark"),
     }
 

@@ -44,6 +44,19 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """A zero-row frame with exactly ``schema`` (nullability included),
+    planned as a JVM ``LocalRelation``: scans run no Python tasks, and
+    the optimizer folds joins and unions against it away.
+    ``createDataFrame([], schema)`` instead plans a Python RDD whose
+    every scan launches Python workers."""
+    js = spark._jsparkSession
+    jdf = js.createDataFrame(
+        spark._jvm.java.util.ArrayList(), js.parseDataType(schema.json())
+    )
+    return DataFrame(jdf, spark)
+
+
 class ParquetMergeTable:
     """A keyed target table with atomic versioned commits and
     batch-id-idempotent MERGE, **merge-on-read** style.
@@ -380,18 +393,56 @@ class ParquetMergeTable:
         v = self.version_of_batch(batch_id)
         return self.read_sidecar(v) if v is not None else None
 
-    def _write_snapshot(self, df: DataFrame, cols: Sequence[str], out: str) -> None:
-        df = df.select(list(cols))
-        w = df.write.mode("overwrite")
+    def _write_snapshot(
+        self, df: DataFrame, cols: Sequence[str], out: str,
+        split: str | None = None,
+    ) -> None:
+        """``split`` names a leading boolean partition column: the one
+        write job lands the rows under ``out/<split>=true|false``."""
+        df = df.select(list(cols) + ([split] if split else []))
+        parts = ([split] if split else []) + (self.partition_by or [])
         if self.partition_by:
             # hash-distribute on the partition columns before the write
             # (Iceberg write.distribution-mode=hash): each partition dir
             # gets ~1 file per snapshot instead of one per task — tiny-
             # file/footer explosion is the classic merge-on-read killer
-            w = df.repartition(
-                *[F.col(c) for c in self.partition_by]
-            ).write.mode("overwrite").partitionBy(*self.partition_by)
+            df = df.repartition(*[F.col(c) for c in self.partition_by])
+        w = df.write.mode("overwrite")
+        if parts:
+            w = w.partitionBy(*parts)
         w.parquet(out)
+
+    def _write_split(
+        self, df: DataFrame, cols: Sequence[str], v: int, split: str
+    ) -> T.StructType | None:
+        """ONE write job for both sides of a boolean verdict: the
+        ``split``-true rows become snapshot ``v`` (its readers see only
+        ``cols``; the other columns are written NULL there), the false
+        rows — every column but ``split`` — its sidecar, so a caller
+        that needs the rejected rows never re-scans (re-computes) ``df``
+        for them.  Returns the sidecar's schema, or None when no row
+        was rejected (no sidecar dir exists then)."""
+        side = [c for c in df.columns if c not in cols and c != split]
+        df = df.select(
+            *cols,
+            *[F.when(~F.col(split), F.col(c)).alias(c) for c in side],
+            split,
+        )
+        stage = os.path.join(self.path, "_stage")
+        shutil.rmtree(stage, ignore_errors=True)
+        self._write_snapshot(df, list(cols) + side, stage, split=split)
+        for flag, dst in (
+            ("true", self._version_dir(v)), ("false", self._sidecar_dir(v))
+        ):
+            shutil.rmtree(dst, ignore_errors=True)  # a crashed attempt's
+            src = os.path.join(stage, f"{split}={flag}")
+            if os.path.isdir(src):
+                os.replace(src, dst)
+        os.makedirs(self._version_dir(v), exist_ok=True)  # none accepted
+        shutil.rmtree(stage, ignore_errors=True)
+        if not os.path.isdir(self._sidecar_dir(v)):
+            return None
+        return df.drop(split).schema
 
     # -- read ----------------------------------------------------------
 
@@ -427,7 +478,7 @@ class ParquetMergeTable:
                 keep.add(op_col)  # delete detection must survive pruning
             fields = [c for c in fields if c in keep]
         if base is None and not deltas:
-            return self.spark.createDataFrame([], self.schema)
+            return empty_frame(self.spark, self.schema)
 
         def _pruned(df: DataFrame) -> DataFrame:
             return df.where(partition_filter) if partition_filter is not None else df
@@ -481,6 +532,7 @@ class ParquetMergeTable:
         op_col: str = "op",
         commit_info: dict | None = None,
         sidecar: DataFrame | None = None,
+        split: str | None = None,
     ) -> int | None:
         """MERGE INTO this table USING changes ON pkey.
 
@@ -499,7 +551,12 @@ class ParquetMergeTable:
         exactly-once sink stores its DLQ-split decision here so a
         replay after a crash between target-commit and queue-commit
         re-enqueues the ORIGINAL split instead of recomputing it
-        against a queue that may have changed in between."""
+        against a queue that may have changed in between.
+
+        ``split``: a boolean column of ``changes``; only its true rows
+        merge, and the false rows (all their columns) become the
+        commit's sidecar in the SAME write job (no sidecar when none is
+        false)."""
         if batch_id is not None and batch_id in self.committed_batch_ids():
             return None
         v = (self.current_version() or 0) + 1
@@ -517,7 +574,12 @@ class ParquetMergeTable:
             # atomic publication point for data + sidecar together
             sidecar.write.mode("overwrite").parquet(self._sidecar_dir(v))
             info["sidecar_schema"] = sidecar.schema.json()
-        self._write_snapshot(changes, write_cols, self._version_dir(v))
+        if split is None:
+            self._write_snapshot(changes, write_cols, self._version_dir(v))
+        else:
+            side = self._write_split(changes, write_cols, v, split)
+            if side is not None:
+                info["sidecar_schema"] = side.json()
         self._append_commit(v, batch_id, kind="delta", info=info or None)
         if self.compact_every is not None:
             _, deltas = self._live_commits()

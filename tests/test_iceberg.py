@@ -238,6 +238,16 @@ class _FakeDF:
     def where(self, *a, **k):
         return self
 
+    def drop(self, *a):
+        return self
+
+    def observe(self, obs, *cols):
+        return self
+
+    def isEmpty(self):
+        self._s.calls.append(("isEmpty", None))
+        return self._s.df_empty
+
     def createOrReplaceTempView(self, view):
         self._s.calls.append(("view", view))
 
@@ -256,6 +266,7 @@ class FakeIcebergSession:
         self.snapshots = list(snapshots or [])
         self.props = dict(props or {})
         self.sidecar_exists = sidecar_exists
+        self.df_empty = True  # what every fake frame's isEmpty() says
         self.calls = []
         self._conf = {"spark.sql.catalog.cat": "fake"}
         self.conf = self
@@ -420,6 +431,87 @@ def test_merge_sidecar_other_errors_propagate():
         t.merge(fake.df(), batch_id=1, sidecar=fake.df())
     with pytest.raises(AssertionError):
         fake.index_of("create", None)
+
+
+class _Counted:
+    """Stands in for the Observation ``merge(split=)`` reads: ``n``
+    rejected rows, or ``None`` for a MERGE that ran no task (no metrics
+    row, so ``get`` raises)."""
+
+    n = 0
+
+    def __init__(self, name):
+        pass
+
+    @property
+    def get(self):
+        if _Counted.n is None:
+            raise RuntimeError("observation never materialized")
+        return {"n": _Counted.n}
+
+
+def _split_merge(spark, monkeypatch, n, df_empty=True):
+    import hermes_spark.iceberg as ice
+
+    monkeypatch.setattr(ice, "Observation", _Counted)
+    monkeypatch.setattr(_Counted, "n", n)
+    fake = FakeIcebergSession(snapshots=[])
+    fake.df_empty = df_empty
+    real_sql = fake.sql
+
+    def sql_with_commit(stmt):
+        r = real_sql(stmt)
+        if stmt.startswith("MERGE INTO cat.db.t "):
+            fake.snapshots.insert(0, (55, "4"))
+        return r
+
+    fake.sql = sql_with_commit
+    v = _table(fake).merge(
+        fake.df(), batch_id=4, split="_ok", commit_info={"split": "inline"}
+    )
+    assert v == 55
+    return fake
+
+
+def test_split_merge_without_rejects_writes_no_sidecar(spark, monkeypatch):
+    """A healthy split batch is one MERGE scan: the observation says no
+    row was rejected, so the sidecar table is neither probed nor
+    written (a written empty split would make every later read of it
+    look like a failure)."""
+    fake = _split_merge(spark, monkeypatch, n=0)
+    assert fake.index_of("sql", "MERGE INTO cat.db.t ") >= 0
+    assert not any(
+        c[0] in ("append", "create", "isEmpty")
+        or (c[0] == "sql" and "t_sidecar" in c[1])
+        for c in fake.calls
+    ), fake.calls
+
+
+def test_split_merge_writes_rejects_after_merge_before_annotation(
+    spark, monkeypatch
+):
+    """Rejected rows land in the shared sidecar table after the MERGE
+    (whose scan counted them) and before the ``split: inline``
+    annotation, replay-idempotently (delete, then append)."""
+    fake = _split_merge(spark, monkeypatch, n=2)
+    i_merge = fake.index_of("sql", "MERGE INTO cat.db.t ")
+    i_del = fake.index_of("sql", "DELETE FROM cat.db.t_sidecar")
+    i_app = fake.index_of("append", None)
+    i_note = fake.index_of("sql", "hermes.lineage.55")
+    assert i_merge < i_del < i_app < i_note
+    assert fake.calls[i_app][1] == "cat.db.t_sidecar"
+
+
+@pytest.mark.parametrize("df_empty", [True, False])
+def test_split_merge_zero_task_falls_back_to_a_probe(
+    spark, monkeypatch, df_empty
+):
+    """No metrics row (a MERGE that ran no task): the rejects are
+    probed directly, and only a non-empty side is written."""
+    fake = _split_merge(spark, monkeypatch, n=None, df_empty=df_empty)
+    assert fake.index_of("isEmpty") > fake.index_of("sql", "MERGE INTO")
+    wrote = any(c[0] == "append" for c in fake.calls)
+    assert wrote is (not df_empty)
 
 
 def test_vacuum_sidecar_keepset_before_main_expiry():

@@ -118,3 +118,105 @@ def test_crash_between_target_and_queue_replays_clean(spark, rig):
     assert [(r.conv_id, r.err) for r in dlq.read().collect()] == [
         ("b", "validation failed")
     ]
+
+
+def test_inline_and_persisted_splits_share_one_sidecar_shape(spark, rig):
+    """Batch 0 meets an empty queue (inline split, written with the
+    delta), batch 1 a non-empty one (gated, persisted split): both
+    sidecars are queue events — payload + offset + err — so a catalog
+    twin appending both to one sidecar table sees one schema, and the
+    target's own reads never see the sidecar-only columns."""
+    target, _dlq, sink = rig
+    sink(_batch(spark, B0), 0)
+    sink(_batch(spark, B1), 1)
+    inline, gated = (target.read_sidecar_of_batch(b) for b in (0, 1))
+    assert target.commit_info_of_batch(0).get("split") == "inline"
+    assert target.commit_info_of_batch(1).get("split") is None
+
+    def shape(df):
+        return {f.name: f.dataType for f in df.schema.fields}
+
+    assert shape(inline) == shape(gated)
+    assert {"offset", "err"} <= set(inline.columns)
+    assert [(r.conv_id, r.err) for r in inline.collect()] == [
+        ("b", "validation failed")
+    ]
+    assert target.read().columns == [f.name for f in CHANGE_EVENT_SCHEMA.fields]
+
+
+def test_empty_sidecar_read_latches_without_enqueue(spark, tmp_work):
+    """A target answering a batch without rejects with an EMPTY sidecar
+    frame (a catalog's shared sidecar table, once it exists) latches
+    the queue ledger — no queue delta, the queue stays known-empty, so
+    the next trigger keeps the fast path."""
+    from hermes_spark.tables import empty_frame
+
+    class SharedSidecarTable(ParquetMergeTable):
+        def read_sidecar_of_batch(self, batch_id):
+            side = super().read_sidecar_of_batch(batch_id)
+            return side if side is not None else empty_frame(
+                self.spark, self.schema
+            )
+
+    target = SharedSidecarTable(
+        spark, f"{tmp_work}/target", key=["conv_id", "turn_idx"],
+        schema=CHANGE_EVENT_SCHEMA, compact_every=None,
+    )
+    dlq = DeadLetterQueue(
+        spark, f"{tmp_work}/dlq", key=["conv_id", "turn_idx"],
+        payload_schema=PAYLOAD,
+    )
+    sink = ExactlyOnceSink(
+        target, dlq=dlq,
+        validator=lambda df: ~F.col("text").contains("POISON"),
+    )
+    sink(_batch(spark, B0[:1]), 0)
+    assert "sink-0" in dlq.table.committed_batch_ids()
+    assert dlq.table.current_version() is None  # nothing enqueued
+    assert dlq._empty_hint is True
+
+
+def test_enqueueing_trigger_runs_the_classifier_once(spark, tmp_work):
+    """A trigger whose rows fail validation reports the same state-store
+    rows total as a healthy trigger over the same state: the delta
+    write keeps the rejected rows as its sidecar in the same job, so
+    the stateful classifier is not re-run to find them (each extra read
+    of the foreachBatch frame would re-execute it and add its rows
+    total again)."""
+    import datetime as dt
+
+    from hermes_spark.schema import TRANSCRIPT_SCHEMA
+    from hermes_spark.streaming.pipeline import CdcPipeline
+
+    t0 = dt.datetime(2026, 1, 1)
+    src = f"{tmp_work}/src"
+
+    def publish(turns, poison=()):
+        rows = [
+            (c, i, "user", ("POISON " if (c, i) in poison else "") + f"{c}{i}",
+             None, t0 + dt.timedelta(minutes=i))
+            for c in ("a", "b", "c") for i in turns
+        ]
+        spark.createDataFrame(rows, TRANSCRIPT_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+
+    publish(range(0, 4))
+    publish(range(4, 6), poison={("b", 4), ("b", 5)})
+    pipe = CdcPipeline(
+        spark, src, f"{tmp_work}/run", max_files_per_trigger=1,
+        validator=lambda df: ~F.col("text").contains("POISON"),
+    )
+    q = pipe.start()
+    try:
+        q.processAllAvailable()
+        prog = [p for p in q.recentProgress if p.numInputRows > 0]
+    finally:
+        q.stop()
+    assert [p.numInputRows for p in prog] == [12, 6]
+    healthy, poisoned = (p.stateOperators[0].numRowsTotal for p in prog)
+    assert healthy > 0 and poisoned == healthy
+    assert sorted((r.conv_id, r.turn_idx) for r in pipe.dlq.read().collect()) == [
+        ("b", 4), ("b", 5)
+    ]
+    assert pipe.target_live().count() == 16

@@ -59,6 +59,10 @@ def test_status_listener_and_ledger_fold(spark, tmp_work):
         dp = _data_progress()
         assert dp is not None and dp["num_input_rows"] == 30
         assert dp["duration_ms"].get("triggerExecution", 0) > 0
+        # the stateful classifier's store cost rides every progress row
+        assert dp["state_rows_total"] > 0 and dp["state_memory_bytes"] > 0
+        for k in ("state_commit_ms", "state_load_ms", "changelog_commit_ms"):
+            assert dp[k] >= 0
         assert s["sustained_rows_per_sec"] is None or s["sustained_rows_per_sec"] > 0
         # the JSONL audit file parses line-by-line and carries the
         # started + progress lifecycle
@@ -175,3 +179,42 @@ def test_union_fanout_feeds_per_objtype_counters(spark):
 
     with pytest.raises(ValueError, match="at least one"):
         union_fanout({})
+
+
+def test_progress_row_reports_state_store_cost():
+    """The status row carries where the state store's time and memory
+    went, summed over stateful operators — commit time, memory, and the
+    RocksDB load and changelog-commit latencies — so a classifier that
+    re-runs inside one trigger shows in the ``status`` verb."""
+    from types import SimpleNamespace
+
+    from hermes_spark.streaming.status import _progress_row
+
+    def op(total, commit, mem, load, changelog):
+        return SimpleNamespace(
+            numRowsTotal=total, numRowsUpdated=1, commitTimeMs=commit,
+            memoryUsedBytes=mem,
+            customMetrics={
+                "rocksdbLoadLatencyMs": load,
+                "rocksdbChangeLogWriterCommitLatencyMs": changelog,
+            },
+        )
+
+    p = SimpleNamespace(
+        id="q", name=None, batchId=3, timestamp="t", numInputRows=5,
+        inputRowsPerSecond=1.0, processedRowsPerSecond=2.0,
+        durationMs={"triggerExecution": 9}, eventTime={},
+        stateOperators=[op(10, 4, 100, 7, 2), op(5, 1, 50, 3, 1)],
+    )
+    row = _progress_row(p)
+    assert row["state_rows_total"] == 15
+    assert row["state_commit_ms"] == 5
+    assert row["state_memory_bytes"] == 150
+    assert row["state_load_ms"] == 10
+    assert row["changelog_commit_ms"] == 3
+    # a stateless query reports zeros, not missing keys
+    row = _progress_row(SimpleNamespace(**{**vars(p), "stateOperators": None}))
+    assert [row[k] for k in (
+        "state_commit_ms", "state_memory_bytes", "state_load_ms",
+        "changelog_commit_ms",
+    )] == [0, 0, 0, 0]
